@@ -280,3 +280,86 @@ def test_dangling_owner_marker_does_not_break_committed_read(spark,
     with open(os.path.join(root, "_attempt-dead.writer.json"), "w") as fh:
         json.dump({"pid": 999999999}, fh)
     assert cat.read_snapshot(spark, "t", "v1").count() == 10
+
+
+@pytest.fixture()
+def projected(spark, pages, tmp_path):
+    """A committed `enriched` snapshot with `extracted` and `metrics`
+    committed as projections over it, the way jobs/extract.py does."""
+    from ukrainian_ocr_pipeline_spark.operators.extract import (
+        EXTRACTED_EXPRS, METRICS_EXPRS, extract_pages,
+    )
+    cat = SnapshotCatalog(str(tmp_path / "wh"))
+    enriched = extract_pages(pages.limit(30), mode="arrow").drop("html", "text")
+    cat.write_snapshot(enriched, "enriched", "p1")
+    cat.write_projection("extracted", "p1", "enriched", "p1", EXTRACTED_EXPRS)
+    cat.write_projection("metrics", "p1", "enriched", "p1", METRICS_EXPRS)
+    return cat
+
+
+def test_projections_read_back_as_the_operator_tables(spark, projected):
+    """Committed `extracted`/`metrics` projections equal
+    extracted_table/metrics_table of the committed `enriched` in schema
+    and in values; processing_time stays a double (an ANSI `1000.0`
+    literal would make it a decimal)."""
+    from pyspark.sql import types as T
+
+    from ukrainian_ocr_pipeline_spark.operators.extract import (
+        extracted_table, metrics_table,
+    )
+    cat = projected
+    enriched = cat.read_snapshot(spark, "enriched", "p1")
+    for table, op in (("extracted", extracted_table), ("metrics", metrics_table)):
+        got = cat.read_snapshot(spark, table, "p1")
+        want = op(enriched)
+        assert got.schema == want.schema, table
+        assert (sorted(got.collect(), key=lambda r: r.url)
+                == sorted(want.collect(), key=lambda r: r.url)), table
+        assert cat.manifest(table, "p1")["mode"] == "projection"
+    m = cat.read_snapshot(spark, "metrics", "p1")
+    assert m.schema["processing_time"].dataType == T.DoubleType()
+    t_ms = {r.url: r.t_ms for r in enriched.select("url", "t_ms").collect()}
+    for r in m.select("url", "processing_time", "stage_times").collect():
+        assert r.processing_time == t_ms[r.url] / 1000.0
+        assert r.stage_times == {"extract": t_ms[r.url]}
+    assert m.count() == 30
+
+
+def test_projection_refuses_uncommitted_source_and_recommit_is_noop(
+        spark, projected):
+    import os
+
+    from ukrainian_ocr_pipeline_spark.operators.extract import EXTRACTED_EXPRS
+    cat = projected
+    with pytest.raises(FileNotFoundError, match="not committed"):
+        cat.write_projection("extracted", "p2", "enriched", "p2", EXTRACTED_EXPRS)
+    assert not cat.is_committed("extracted", "p2")
+    with pytest.raises(ValueError, match="itself a projection"):
+        cat.write_projection("x", "p1", "extracted", "p1", ["url"])
+
+    before = cat.manifest("extracted", "p1")
+    again = cat.write_projection("extracted", "p1", "enriched", "p1", ["url"])
+    assert again == before and again["select"] == EXTRACTED_EXPRS
+    assert len(os.listdir(cat._snap_dir("extracted"))) == 1
+
+
+def test_vacuum_keeps_a_projected_source_dir(spark, projected):
+    """vacuum('enriched') removes dead orphans but keeps the dir a
+    projection reads, even with the source manifest gone (as a future
+    snapshot expiry would leave it)."""
+    import json
+    import os
+
+    from ukrainian_ocr_pipeline_spark.sources.catalog import _owner_marker
+    cat = projected
+    src_dir = cat.manifest("enriched", "p1")["data_dir"]
+    assert cat.manifest("metrics", "p1")["data_dir"] == src_dir
+    orphan = os.path.join(cat._data_dir("enriched", "p1"), "attempt-deadbeef")
+    os.makedirs(orphan)
+    with open(_owner_marker(orphan), "w") as fh:
+        json.dump({"pid": 999999999}, fh)
+    os.unlink(os.path.join(cat._snap_dir("enriched"), "p1.json"))
+
+    assert cat.vacuum("enriched") == [orphan]
+    assert os.path.isdir(src_dir)
+    assert cat.read_snapshot(spark, "metrics", "p1").count() == 30

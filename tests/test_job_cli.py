@@ -5,6 +5,7 @@ import os
 import sys
 
 import pandas as pd
+import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 
@@ -253,3 +254,80 @@ def test_stream_job_neardup_verdict_mode(spark, tmp_path, capsys):
                   "--checkpoint", ckpt, "--neardup-watermark", "1 hour",
                   "--dedup-watermark", "1 hour"])
     assert exc.value.code == 2
+
+
+def _stats_line(capsys) -> dict:
+    import json
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_job_rerun_reads_stats_from_manifest(spark, t2_rows, tmp_path, capsys):
+    """The stats line is observed during the lineage write and stored in
+    its manifest: it equals a fresh aggregate over the committed metrics,
+    and a re-run of the committed snapshot prints the identical line
+    while starting no Spark job at all."""
+    import extract as job
+
+    from ukrainian_ocr_pipeline_spark.operators.extract import pipeline_stats
+    from ukrainian_ocr_pipeline_spark.sources.catalog import SnapshotCatalog
+
+    pages_path = _stage_pages(tmp_path / "pages.parquet", t2_rows[:40])
+    wh = str(tmp_path / "wh")
+    argv = ["--pages", pages_path, "--warehouse", wh, "--snapshot-id", "s1",
+            "--buckets", "0"]
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("extract-first", "first run")
+        assert job.main(argv) == 0
+        first = _stats_line(capsys)
+        n_first = len(sc.statusTracker().getJobIdsForGroup("extract-first"))
+        sc.setJobGroup("extract-rerun", "re-run")
+        assert job.main(argv) == 0
+        again = _stats_line(capsys)
+        n_rerun = len(sc.statusTracker().getJobIdsForGroup("extract-rerun"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < n_first <= 5
+    assert n_rerun == 0
+    assert again == first
+    assert first["pages_processed"] == 40 and first["pages_failed"] == 0
+
+    cat = SnapshotCatalog(wh)
+    want = pipeline_stats(cat.read_snapshot(spark, "metrics", "s1")).first().asDict()
+    assert first.keys() == want.keys()
+    for k, v in want.items():
+        assert first[k] == pytest.approx(v), k
+    for table in ("extracted", "metrics", "lineage"):
+        assert len(os.listdir(os.path.join(wh, table, "snapshots"))) == 1
+
+    # a lineage manifest committed before stats were observed: the
+    # re-run aggregates the committed metrics instead
+    import json
+    path = os.path.join(wh, "lineage", "snapshots", "s1.json")
+    with open(path) as fh:
+        manifest = json.load(fh)
+    del manifest["observed"]
+    with open(path, "w") as fh:
+        json.dump(manifest, fh)
+    assert job.main(argv) == 0
+    old = _stats_line(capsys)
+    assert old.keys() == first.keys()
+    for k, v in first.items():
+        assert old[k] == pytest.approx(v), k
+
+
+def test_job_empty_input_prints_zero_stats(spark, tmp_path, capsys):
+    """Zero pages in: every count and sum prints 0 (an observed sum over
+    no rows is NULL, which must not reach the JSON line as null)."""
+    import extract as job
+
+    pages_path = _stage_pages(tmp_path / "pages.parquet", {
+        "url": [], "warc_ts": [], "html": [], "text": [], "lang": []})
+    assert job.main(["--pages", pages_path, "--warehouse", str(tmp_path / "wh"),
+                     "--snapshot-id", "e1", "--buckets", "0"]) == 0
+    stats = _stats_line(capsys)
+    assert stats == {
+        "pages_processed": 0, "pages_ok": 0, "pages_failed": 0,
+        "total_blocks": 0, "total_blocks_kept": 0, "total_entities": 0,
+        "total_matches": 0, "total_processing_time": 0,
+        "avg_time_per_page": 0}

@@ -614,6 +614,19 @@ class TestZipWalk:
         assert es[0]["data"] == b"hello world"
         assert es[1]["data"] is None and es[1]["name"] == "b/c.bin"
 
+    def test_member_table_nulls_declared_size_above_int32(self, spark):
+        """A central-directory entry declaring a u32 size above int32
+        max gets n_bytes NULL (not a wrapped or failed int32 cast);
+        the honest member next to it keeps its size."""
+        from ukrainian_ocr_pipeline_spark.sources.warc import zip_member_table
+        bad = bytearray(self._blob())
+        cd = bad.index(b"PK\x01\x02")
+        bad[cd + 24:cd + 28] = (0xFFFFFFF0).to_bytes(4, "little")
+        df = spark.createDataFrame([(1, bytes(bad))], "doc_id long, blob binary")
+        rows = sorted(zip_member_table(df).collect(), key=lambda r: r["member_idx"])
+        assert [(r["name"], r["n_bytes"], r["decoded"]) for r in rows] == [
+            ("a.txt", None, False), ("b/c.bin", 1000, True)]
+
     def test_wacz_chain_end_to_end(self, spark):
         from ukrainian_ocr_pipeline_spark.sources.warc import (
             synth_wacz_corpus,

@@ -154,9 +154,42 @@ def extract_pages(pages: DataFrame, lexicon: list[str] | None = None,
             .drop("enrich"))
 
 
+#: the `extracted` output table (FIXTURES.md §3) as select expressions
+#: over `enriched`; jobs/extract.py commits this same list as the
+#: table's projection manifest, so the two definitions cannot drift
+EXTRACTED_EXPRS = ["url", "warc_ts", "extracted_text", "spans"]
+
+#: per-url stage metrics (analog of the result record,
+#: core/pipeline.py:322-346) over `enriched`; committed as a projection
+#: like EXTRACTED_EXPRS.  `1000D` is a double literal: under ANSI SQL a
+#: bare `1000.0` is a decimal, and processing_time must stay a double.
+METRICS_EXPRS = [
+    "url", "success", "error", "kind", "charset", "fallback_level",
+    "blocks_detected", "blocks_kept",
+    "size(spans) AS entities",
+    "size(matches) AS matches",
+    "map('extract', t_ms) AS stage_times",
+    "t_ms / 1000D AS processing_time",
+]
+
+#: run stats over the metrics columns (analog of pipeline stats,
+#: core/pipeline.py:551-557 + batch summary core/batch_processor.py:234-274)
+STATS_EXPRS = [
+    "count(*) AS pages_processed",
+    "sum(if(success, 1, 0)) AS pages_ok",
+    "sum(if(NOT success, 1, 0)) AS pages_failed",
+    "sum(blocks_detected) AS total_blocks",
+    "sum(blocks_kept) AS total_blocks_kept",
+    "sum(entities) AS total_entities",
+    "sum(matches) AS total_matches",
+    "sum(processing_time) AS total_processing_time",
+    "avg(processing_time) AS avg_time_per_page",
+]
+
+
 def extracted_table(enriched: DataFrame) -> DataFrame:
     """The `extracted` output table (FIXTURES.md §3)."""
-    return enriched.select("url", "warc_ts", "extracted_text", "spans")
+    return enriched.selectExpr(*EXTRACTED_EXPRS)
 
 
 def blocks_table(enriched: DataFrame) -> DataFrame:
@@ -168,16 +201,8 @@ def blocks_table(enriched: DataFrame) -> DataFrame:
 
 
 def metrics_table(enriched: DataFrame) -> DataFrame:
-    """Per-url stage metrics (analog of the result record,
-    core/pipeline.py:322-346). All JVM-side expressions — no extra UDF."""
-    return enriched.select(
-        "url", "success", "error", "kind", "charset", "fallback_level",
-        "blocks_detected", "blocks_kept",
-        F.size("spans").alias("entities"),
-        F.size("matches").alias("matches"),
-        F.create_map(F.lit("extract"), F.col("t_ms")).alias("stage_times"),
-        (F.col("t_ms") / 1000.0).alias("processing_time"),
-    )
+    """Per-url stage metrics. All JVM-side expressions — no extra UDF."""
+    return enriched.selectExpr(*METRICS_EXPRS)
 
 
 def lineage_table(enriched: DataFrame, snapshot_id: int = 0) -> DataFrame:
@@ -205,16 +230,14 @@ def lineage_table(enriched: DataFrame, snapshot_id: int = 0) -> DataFrame:
 
 
 def pipeline_stats(metrics: DataFrame) -> DataFrame:
-    """Aggregate run stats (analog of pipeline stats,
-    core/pipeline.py:551-557 + batch summary core/batch_processor.py:234-274)."""
-    return metrics.agg(
-        F.count("*").alias("pages_processed"),
-        F.sum(F.when(F.col("success"), 1).otherwise(0)).alias("pages_ok"),
-        F.sum(F.when(~F.col("success"), 1).otherwise(0)).alias("pages_failed"),
-        F.sum("blocks_detected").alias("total_blocks"),
-        F.sum("blocks_kept").alias("total_blocks_kept"),
-        F.sum("entities").alias("total_entities"),
-        F.sum("matches").alias("total_matches"),
-        F.sum("processing_time").alias("total_processing_time"),
-        F.avg("processing_time").alias("avg_time_per_page"),
-    )
+    """Aggregate run stats over a metrics table, as one row."""
+    return metrics.agg(*[F.expr(e) for e in STATS_EXPRS])
+
+
+def observe_stats(enriched: DataFrame, observation) -> DataFrame:
+    """The metrics columns plus t_ms, with the pipeline_stats aggregates
+    attached as `observation`: the stats arrive with whatever action
+    consumes the frame (the lineage write in jobs/extract.py) instead of
+    costing a scan of their own."""
+    return (enriched.selectExpr(*METRICS_EXPRS, "t_ms")
+            .observe(observation, *[F.expr(e) for e in STATS_EXPRS]))

@@ -16,6 +16,20 @@ provides the same contract on plain Parquet:
     the north rule's "resumes from the last committed checkpoint",
   * idempotence: re-running a committed (input_snapshot, job) is a no-op.
 
+A manifest's `mode` says how its snapshot is stored:
+
+  * `full` — one write-audit-publish attempt dir (`write_snapshot`);
+    may carry `observed`, the result of an `Observation` attached to
+    the written frame, so a job can report stats without a re-scan,
+  * `bucketed` — the shared `data-<id>` root of per-bucket dirs
+    (`write_snapshot_bucketed`),
+  * `projection` — no data of its own (`write_projection`): the
+    manifest names a committed source snapshot, copies its `data_dir`
+    and lists SQL select expressions that `read_snapshot` applies.  A
+    projection PINS its source snapshot: `vacuum` keeps every dir a
+    projection points at, and any future snapshot expiry must not drop
+    a source that a live projection still reads.
+
 Reference analog: the per-item error capture + summary reporting of
 core/batch_processor.py:58-66,223-283 gave crash *visibility* but not
 restartability; this layer adds the restartability.
@@ -29,7 +43,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class CommitConflict(Exception):
@@ -164,15 +178,29 @@ class SnapshotCatalog:
     def is_committed(self, table: str, snapshot_id: str) -> bool:
         return os.path.exists(os.path.join(self._snap_dir(table), f"{snapshot_id}.json"))
 
+    def manifest(self, table: str, snapshot_id: str) -> dict | None:
+        """The committed manifest of one snapshot, or None."""
+        try:
+            with open(os.path.join(self._snap_dir(table), f"{snapshot_id}.json"),
+                      encoding="utf-8") as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
+
     # -- write paths ---------------------------------------------------------
     def write_snapshot(self, df: DataFrame, table: str, snapshot_id: str,
-                       parent: str | None = None) -> dict:
+                       parent: str | None = None,
+                       observation: Observation | None = None) -> dict:
         """Single-job write-audit-publish: stage the whole dataset, then
-        commit atomically. Re-running a committed snapshot is a no-op."""
+        commit atomically. Re-running a committed snapshot is a no-op.
+
+        `observation`, if given, must be attached to `df` (`df.observe`);
+        its result is stored in the manifest as `observed`.  A no-op
+        re-run returns the stored result and never touches the
+        observation, whose `get` would block on the skipped write."""
         if self.is_committed(table, snapshot_id):
             # idempotent: return THIS snapshot's manifest, not the latest
-            return next(s for s in self.snapshots(table)
-                        if s["snapshot_id"] == snapshot_id)
+            return self.manifest(table, snapshot_id)
         # stage into a per-ATTEMPT directory: concurrent writers of the
         # same snapshot_id (retried-but-not-dead orchestrator tasks)
         # must never share a staging path — the old shared-dir staging
@@ -188,18 +216,18 @@ class SnapshotCatalog:
         owner = _owner_marker(stage_dir)
         _write_owner(owner)
         df.write.mode("overwrite").parquet(stage_dir)
+        manifest = {"snapshot_id": snapshot_id, "parent": parent,
+                    "data_dir": stage_dir, "committed_at_unix": time.time(),
+                    "mode": "full"}
+        if observation is not None:
+            manifest["observed"] = observation.get
         try:
-            manifest = self._commit(table, {
-                "snapshot_id": snapshot_id, "parent": parent,
-                "data_dir": stage_dir, "committed_at_unix": time.time(),
-                "mode": "full",
-            })
+            manifest = self._commit(table, manifest)
         except CommitConflict:
             # lost the race: discard our stage, adopt the winner's result
             shutil.rmtree(stage_dir, ignore_errors=True)
             _unlink_quiet(owner)
-            return next(s for s in self.snapshots(table)
-                        if s["snapshot_id"] == snapshot_id)
+            return self.manifest(table, snapshot_id)
         _unlink_quiet(owner)  # committed: the manifest now guards the dir
         # winner: GC sibling attempt dirs whose writer is dead (crashed
         # attempts would otherwise leak a full dataset copy each); live
@@ -212,6 +240,36 @@ class SnapshotCatalog:
                 shutil.rmtree(path, ignore_errors=True)
                 _unlink_quiet(_owner_marker(path))
         return manifest
+
+    def write_projection(self, table: str, snapshot_id: str,
+                         source_table: str, source_snapshot: str,
+                         select: list[str]) -> dict:
+        """Commit `table` as SQL `select` expressions over a committed
+        snapshot of `source_table`: a manifest, no data.  Re-committing
+        is a no-op; a source that is not committed (or is itself a
+        projection) raises instead of publishing a dangling view."""
+        if self.is_committed(table, snapshot_id):
+            return self.manifest(table, snapshot_id)
+        src = self.manifest(source_table, source_snapshot)
+        if src is None:
+            raise FileNotFoundError(
+                f"projection {table}/{snapshot_id}: source "
+                f"{source_table}/{source_snapshot} is not committed")
+        if src.get("mode") == "projection":
+            raise ValueError(
+                f"projection {table}/{snapshot_id}: source "
+                f"{source_table}/{source_snapshot} is itself a projection")
+        try:
+            return self._commit(table, {
+                "snapshot_id": snapshot_id, "parent": None,
+                "data_dir": src["data_dir"],
+                "source": {"table": source_table,
+                           "snapshot_id": source_snapshot},
+                "select": list(select),
+                "committed_at_unix": time.time(), "mode": "projection",
+            })
+        except CommitConflict:
+            return self.manifest(table, snapshot_id)
 
     def write_snapshot_bucketed(self, pages: DataFrame, table: str,
                                 snapshot_id: str, n_buckets: int,
@@ -230,8 +288,7 @@ class SnapshotCatalog:
         10^12 docs, n_buckets ~ O(10^3) keeps restart loss ~0.1% of work.
         """
         if self.is_committed(table, snapshot_id):
-            return next(s for s in self.snapshots(table)
-                        if s["snapshot_id"] == snapshot_id)
+            return self.manifest(table, snapshot_id)
         data_dir = self._data_dir(table, snapshot_id)
         markers = self._markers_dir(table, snapshot_id)
         os.makedirs(markers, exist_ok=True)
@@ -257,8 +314,7 @@ class SnapshotCatalog:
                 # (snapshot committed concurrently): the is_committed
                 # re-check short-circuits, else recreate and retry
                 if self.is_committed(table, snapshot_id):
-                    return next(s for s in self.snapshots(table)
-                                if s["snapshot_id"] == snapshot_id)
+                    return self.manifest(table, snapshot_id)
                 os.makedirs(markers, exist_ok=True)
                 continue
             try:
@@ -284,8 +340,7 @@ class SnapshotCatalog:
             except FileNotFoundError:
                 _unlink_quiet(stage)
                 if self.is_committed(table, snapshot_id):
-                    return next(s for s in self.snapshots(table)
-                                if s["snapshot_id"] == snapshot_id)
+                    return self.manifest(table, snapshot_id)
                 os.makedirs(markers, exist_ok=True)
                 continue
             _unlink_quiet(stage)
@@ -357,8 +412,7 @@ class SnapshotCatalog:
             # the marker-guarded layout — adopt the manifest, and clean
             # our markers like the winning path does
             shutil.rmtree(markers, ignore_errors=True)
-            return next(s for s in self.snapshots(table)
-                        if s["snapshot_id"] == snapshot_id)
+            return self.manifest(table, snapshot_id)
         shutil.rmtree(markers, ignore_errors=True)
         return manifest
 
@@ -374,6 +428,11 @@ class SnapshotCatalog:
         if not os.path.isdir(tdir):
             return removed
         referenced = {m["data_dir"] for m in self.snapshots(table)}
+        # projections in any table pin the source dirs they read
+        for other in os.listdir(self.root):
+            referenced.update(
+                m["data_dir"] for m in self.snapshots(other)
+                if m.get("source", {}).get("table") == table)
         for entry in sorted(os.listdir(tdir)):
             path = os.path.join(tdir, entry)
             if entry.startswith("data-") and os.path.isdir(path):
@@ -404,11 +463,10 @@ class SnapshotCatalog:
     # -- read path ----------------------------------------------------------
     def read_snapshot(self, spark: SparkSession, table: str,
                       snapshot_id: str | None = None) -> DataFrame:
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"no committed snapshots for table {table}")
-        if snapshot_id is None:
-            m = snaps[-1]
-        else:
-            m = next(s for s in snaps if s["snapshot_id"] == snapshot_id)
-        return spark.read.option("recursiveFileLookup", "true").parquet(m["data_dir"])
+        m = (self.latest_snapshot(table) if snapshot_id is None
+             else self.manifest(table, snapshot_id))
+        if m is None:
+            raise FileNotFoundError(
+                f"no committed snapshot {snapshot_id or ''} for table {table}")
+        df = spark.read.option("recursiveFileLookup", "true").parquet(m["data_dir"])
+        return df.selectExpr(*m["select"]) if m.get("mode") == "projection" else df

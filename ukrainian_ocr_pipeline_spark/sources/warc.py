@@ -896,6 +896,8 @@ def build_fixture_wacz(members: list[tuple[str, bytes, bool]]) -> bytes:
     return bytes(out)
 
 
+_INT32_MAX = 2 ** 31 - 1
+
 ZIP_MEMBER_SCHEMA = ("doc_id bigint, member_idx int, name string, "
                      "method int, n_bytes int, decoded boolean")
 
@@ -905,7 +907,9 @@ def zip_member_table(df, blob_col: str = "blob",
     """Explode a binary ZIP/WACZ column into one row per member —
     (doc_id, member_idx, name, method, n_bytes, decoded) — via one
     Arrow-batched mapInPandas pass; no rows for blobs with no parseable
-    central directory (the parse-or-nothing discipline)."""
+    central directory (the parse-or-nothing discipline).  n_bytes is the
+    declared uncompressed size, NULL when it does not fit the int32
+    column."""
     import pandas as pd
 
     def extract(batches):
@@ -919,8 +923,12 @@ def zip_member_table(df, blob_col: str = "blob",
                     out["member_idx"].append(i)
                     out["name"].append(e["name"])
                     out["method"].append(e["method"])
-                    out["n_bytes"].append(e["usize"])
+                    # a hostile central directory can declare any u32;
+                    # above int32 max it is NULL, never a wrapped value
+                    out["n_bytes"].append(e["usize"] if e["usize"] <= _INT32_MAX
+                                          else None)
                     out["decoded"].append(e["data"] is not None)
+            out["n_bytes"] = pd.array(out["n_bytes"], dtype="Int32")
             yield pd.DataFrame(out)
 
     return df.select(id_col, blob_col).mapInPandas(extract,
